@@ -152,101 +152,6 @@ def cmd_cdc(argv: list[str]) -> None:
     print("RESULT " + json.dumps({"events": events, "walls": walls}))
 
 
-def cmd_collapse(argv: list[str]) -> None:
-    """Compare LWW-collapse physical strategies on bench-shaped data
-    (guide §1: measure before changing the algorithm). All variants are
-    semantically identical on contract data; noop-sink timed, min-of-N."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from datacollector_spark.operators.collapse import lww_collapse, packed_order
-    from datacollector_spark.operators.transforms import transcript_transforms
-    from datacollector_spark.sources.generator import (
-        ChangelogSpec,
-        generate_changelog,
-        write_segments,
-    )
-    from pyspark.sql import functions as F
-
-    spark = _session()
-    work = None
-    if argv and not argv[0].isdigit():
-        # explicit parquet path(s): e.g. a slice of real bench segments
-        paths = argv[0].split(",")
-        reps = int(argv[1]) if len(argv) > 1 else 3
-        raw = spark.read.parquet(*paths)
-    else:
-        events = int(argv[0]) if argv else 2_000_000
-        reps = int(argv[1]) if len(argv) > 1 else 3
-        workdir = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        work = tempfile.mkdtemp(prefix="dcs-collapse-", dir=workdir)
-        seg = os.path.join(work, "seg")
-        spec = ChangelogSpec(
-            n_events=events, n_conversations=max(events // 200, 100), seed=42,
-            min_text_chars=512,
-        )
-        write_segments(generate_changelog(spark, spec), seg, n_segments=16)
-        raw = spark.read.parquet(seg)
-    keys = ["conv_id", "turn_idx"]
-    carries = [c for c in raw.columns if c not in keys]
-
-    def v_joinback():
-        return lww_collapse(raw, strategy="joinback")
-
-    def v_joinback_distinct():
-        packed = packed_order(F.col("lsn"), F.col("seq_in_tx"))
-        winners = (
-            raw.select(*keys, packed.alias("_pk"))
-            .groupBy(*keys)
-            .agg(F.max("_pk").alias("_win"))
-        )
-        return (
-            raw.withColumn("_pk", packed)
-            .join(winners, on=keys)
-            .where(F.col("_pk") == F.col("_win"))
-            .drop("_pk", "_win")
-            .distinct()
-            .select(*keys, *carries)
-        )
-
-    def v_window():
-        packed = packed_order(F.col("lsn"), F.col("seq_in_tx"))
-        w = Window.partitionBy(*keys).orderBy(F.col("_pk").desc())
-        return (
-            raw.withColumn("_pk", packed)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(*keys, *carries)
-        )
-
-    def v_max_by():
-        return lww_collapse(raw, strategy="max_by")
-
-    variants = [
-        ("joinback", v_joinback),
-        ("joinback_distinct", v_joinback_distinct),
-        ("window", v_window),
-        ("max_by", v_max_by),
-    ]
-    out = {name: {"samples": []} for name, _ in variants}
-    # round-robin reps so host noise decorrelates from variant identity
-    for r in range(reps + 1):  # round 0 = warmup
-        for name, fn in variants:
-            spark.sparkContext.setJobDescription(f"collapse {name} rep{r}")
-            t0 = time.perf_counter()
-            transcript_transforms(fn()).write.format("noop").mode("overwrite").save()
-            if r > 0:
-                out[name]["samples"].append(round(time.perf_counter() - t0, 3))
-    for name, fn in variants:
-        out[name]["min"] = min(out[name]["samples"])
-        out[name]["rows"] = fn().count()
-        print(f"{name}: min={out[name]['min']} samples={out[name]['samples']} rows={out[name]['rows']}", flush=True)
-    if work:
-        shutil.rmtree(work, ignore_errors=True)
-    print("RESULT " + json.dumps(out))
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     argv = sys.argv[2:]
@@ -256,7 +161,5 @@ if __name__ == "__main__":
         cmd_explain(argv)
     elif cmd == "cdc":
         cmd_cdc(argv)
-    elif cmd == "collapse":
-        cmd_collapse(argv)
     else:
         raise SystemExit(f"unknown command {cmd}")

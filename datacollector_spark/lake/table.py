@@ -43,6 +43,7 @@ committed snapshots only (manifest pointer flips atomically via rename).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import uuid
@@ -53,6 +54,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datacollector_spark.model import LSN_COLUMN, OP_DELETE
+
+_log = logging.getLogger(__name__)
 
 _BUCKET_COL = "_bucket"
 DELETED_COLUMN = "_deleted"
@@ -407,15 +410,13 @@ class LakeTable:
         cross-batch LWW guard (s.lsn > t._lsn) is enforced at the join in
         COW mode and at read-time winner selection in MOR mode.
         """
-        import os as _os, time as _time
-        _dbg = _os.environ.get("DCS_MERGE_DEBUG") == "1"
+        import time as _time
         _t = _time.time()
         _timings: dict[str, float] = {}
         def _mark(label):
             nonlocal _t
             _timings[label] = round(_time.time() - _t, 3)
-            if _dbg:
-                print(f"[merge-debug] {label}: {_timings[label]:.2f}s", flush=True)
+            _log.debug("merge phase %s: %.2fs", label, _timings[label])
             _t = _time.time()
         if commit_key is not None and self.committed(commit_key):
             return MergeResult(
